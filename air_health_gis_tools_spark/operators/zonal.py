@@ -29,9 +29,11 @@ Two physical strategies:
   deterministic function or a broadcast ndarray). Right when the raster fits
   one executor (the reference's regime: ~100 M px ≈ 800 MB).
 - ``buffered_stats_tiled`` (scale path) — raster as a parquet tile table,
-  points cogrouped with tiles on tile_id (``cogroup.applyInPandas``), partial
-  (sum, cnt, min, max) per (point, tile), final combine via ``groupBy(point)``
-  — classic partial/final aggregation; no tile array is ever replicated per
+  points cogrouped with tiles on tile_id (``cogroup.applyInArrow``: the
+  kernel reads numpy views of the two Arrow tables and returns Arrow, no
+  pandas frame in between), partial (sum, cnt, min, max) per (point,
+  tile), final combine via ``groupBy(point)`` — classic partial/final
+  aggregation; no tile array is ever replicated per
   point, and the shuffle moves only points + partial aggregates, never the
   raster. This is the plan that survives a 100 TB raster.
 """
@@ -43,10 +45,13 @@ from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..geo_synth import RASTER_H, RASTER_W, XRES, raster_value_np
+from ..sources.raster import tile_blocks
 
 
 def _radius_px_at(buffer_m: int, xres: int) -> int:
@@ -313,8 +318,10 @@ def point_tile_ids(df: DataFrame, rmax_px: int, tile_px: int,
     def fdiv(e: str, d: int) -> str:
         return f"((({e}) - pmod({e}, {d})) DIV {d})"
 
-    r0 = fdiv(y_col, xres)
-    c0 = fdiv(x_col, xres)
+    # integral DIV needs integral input: double coordinates truncate to
+    # BIGINT first, as the kernel's ``astype(np.int64)`` does
+    r0 = fdiv(f"CAST({y_col} AS BIGINT)", xres)
+    c0 = fdiv(f"CAST({x_col} AS BIGINT)", xres)
     tr_lo = fdiv(f"greatest({r0} - {rmax_px}, 0L)", tile_px)
     tr_hi = fdiv(f"least({r0} + {rmax_px}, {height - 1}L)", tile_px)
     tc_lo = fdiv(f"greatest({c0} - {rmax_px}, 0L)", tile_px)
@@ -353,14 +360,16 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
     """Partial/final zonal stats over a raster *tile table*.
 
     ``tiles``: (tile_id:long, row0:int, col0:int, h:int, w:int,
-    data:array<double>) — NaN encoded as NULL inside the array is not needed;
-    nodata arrives already as NaN doubles.
+    data:array<double>) — nodata is NaN; a NULL inside the array (tile
+    tables built through pandas carry NaN that way) is read as NaN too.
 
     Plan: points exploded to touched tiles → cogroup(points, tiles) on
     tile_id (one shuffle of the small side each; the tile table is read
-    once) → Arrow kernel emits per-(point, buffer) PARTIAL (sum, cnt, min,
-    max) → groupBy(point) FINAL combine. Mirrors Spark's own partial/final
-    HashAggregate; no tile pixel ever crosses the final shuffle.
+    once) → ``cogroup.applyInArrow`` kernel emits per-(point, buffer)
+    PARTIAL (sum, cnt, min, max) as Arrow batches built from its numpy
+    chunks → groupBy(point) FINAL combine. Mirrors Spark's own
+    partial/final HashAggregate; no tile pixel ever crosses the final
+    shuffle.
 
     Urban-cluster skew (north_rule): a hot tile can hold 100k+ points —
     one cogroup group, one core, the job's straggler. Defense is ADAPTIVE
@@ -446,39 +455,40 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
     # chunk for nothing (r6: ~2 × 8 B × |circle| per point of pure memcpy)
     _full_sel = {b: len(_sels[b]) == len(_dr) for b in buffers_m}
 
-    def _partial(key, pdf_points: pd.DataFrame, pdf_tiles: pd.DataFrame
-                 ) -> pd.DataFrame:
-        if pdf_points.empty:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype="float64") for f in partial_schema})
-        if pdf_tiles.empty:
+    partial_arrow = to_arrow_schema(partial_schema)
+
+    def _emit(cols_out: dict, keep: np.ndarray) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [pa.array(cols_out[f.name][keep], type=f.type)
+             for f in partial_arrow], schema=partial_arrow)
+
+    def _partial(key, pt: pa.Table, tt: pa.Table) -> pa.Table:
+        if pt.num_rows == 0:
+            return partial_arrow.empty_table()
+        xs = pt.column(x_col).to_numpy().astype(np.int64)
+        ys = pt.column(y_col).to_numpy().astype(np.int64)
+        ids = pt.column(id_col).to_numpy()
+        singles = pt.column("single").to_numpy()
+        if tt.num_rows == 0:
             # tile absent from the table (out-of-coverage): emit zero-count
             # partials for the points whose HOME tile this is, so they stay
             # in the output with n_valid = 0 / NULL stats — row-count parity
             # with the broadcast-kernel strategy for arbitrary tile tables.
-            tile_id = int(key[0]) // 64
+            tile_id = key[0].as_py() // 64
             tr, tc = tile_id >> 32, tile_id & 0xFFFFFFFF
-            xs = pdf_points[x_col].to_numpy().astype(np.int64)
-            ys = pdf_points[y_col].to_numpy().astype(np.int64)
             home = (((ys // xres) // tile_px == tr)
                     & ((xs // xres) // tile_px == tc))
-            ids = pdf_points[id_col].to_numpy()[home]
-            cols_out = {id_col: ids,
-                        "single": pdf_points["single"].to_numpy()[home]}
+            n = len(ids)
+            cols_out = {id_col: ids, "single": singles}
             for b in buffers_m:
-                cols_out[f"s_{b}"] = np.zeros(len(ids))
-                cols_out[f"cnt_{b}"] = np.zeros(len(ids), dtype=np.int64)
-                cols_out[f"mn_{b}"] = np.full(len(ids), np.inf)
-                cols_out[f"mx_{b}"] = np.full(len(ids), -np.inf)
-            return pd.DataFrame(cols_out)
-        t = pdf_tiles.iloc[0]
-        th, tw = int(t["h"]), int(t["w"])
-        arr = np.asarray(t["data"], dtype=np.float64).reshape(th, tw)
-        row0, col0 = int(t["row0"]), int(t["col0"])
-        xs = pdf_points[x_col].to_numpy().astype(np.int64)
-        ys = pdf_points[y_col].to_numpy().astype(np.int64)
-        ids = pdf_points[id_col].to_numpy()
-        singles = pdf_points["single"].to_numpy()
+                cols_out[f"s_{b}"] = np.zeros(n)
+                cols_out[f"cnt_{b}"] = np.zeros(n, dtype=np.int64)
+                cols_out[f"mn_{b}"] = np.full(n, np.inf)
+                cols_out[f"mx_{b}"] = np.full(n, -np.inf)
+            return pa.Table.from_batches([_emit(cols_out, home)])
+        # nulls in `data` (pandas-built tile tables) read as NaN = nodata
+        _, row0, col0, arr = next(tile_blocks(tt))
+        th, tw = arr.shape
         pr_all = ys // xres
         pc_all = xs // xres
         # home-tile membership: these rows are kept even at zero count so
@@ -486,7 +496,7 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
         # parity with buffered_stats when a buffer is all-nodata)
         home_all = ((pr_all >= row0) & (pr_all < row0 + th)
                     & (pc_all >= col0) & (pc_all < col0 + tw))
-        frames = []
+        batches = []
         # chunked so hot (salted) groups never build giant temporaries.
         # ~(1 - 2·rmax/tile_px)² of points have their whole window inside
         # this tile (the `single` fraction) — for those the inside mask is
@@ -536,16 +546,15 @@ def buffered_stats_tiled(points: DataFrame, tiles: DataFrame,
                 cols_out[f"mn_{b}"] = mn
                 cols_out[f"mx_{b}"] = mx
                 any_cnt += cnt
-            df_out = pd.DataFrame(cols_out)
-            frames.append(df_out[(any_cnt > 0) | home_all[s0:s1]])
-        return pd.concat(frames, ignore_index=True)
+            batches.append(_emit(cols_out, (any_cnt > 0) | home_all[s0:s1]))
+        return pa.Table.from_batches(batches)
 
     partial = (pts.groupBy("gkey")
                .cogroup(tiles.groupBy("gkey"))
-               .applyInPandas(_partial, partial_schema))
+               .applyInArrow(_partial, partial_schema))
     # the partial table feeds BOTH branches below; without materialization
     # Spark plans the cogroup kernel twice (one per union branch — verified
-    # via explain: two FlatMapCoGroupsInPandas nodes). Partials are
+    # via explain: two FlatMapCoGroupsInArrow nodes). Partials are
     # points-scale (14 numbers per (point, tile)) — persisting them is the
     # cheap side, never the raster.
     partial = partial.persist(StorageLevel.MEMORY_AND_DISK)

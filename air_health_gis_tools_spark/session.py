@@ -4,6 +4,11 @@ Tuned for the sandbox (local[N], single JVM) but expressed exactly as it
 would be on a 1000-executor cluster: AQE on (runtime re-plan + skew-join
 splitting, SURVEY.md §4 O7), Arrow transport for every pandas UDF, shuffle
 partitions sized to parallelism rather than the 200 default.
+
+Sized from the machine it runs on: ``local[N]`` is capped at the cores this
+process may use, and the default driver heap is a quarter of physical RAM
+(the rest is left to the Python workers and the tmpfs shuffle dir).
+``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` override the defaults.
 """
 
 from __future__ import annotations
@@ -12,14 +17,25 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+HOST_CPUS = len(os.sched_getaffinity(0))
+DEFAULT_CPUS = min(int(os.environ.get("SPARK_GRAFT_CPUS", HOST_CPUS)),
+                   HOST_CPUS)
+
+
+def default_driver_mem() -> str:
+    """A quarter of MemTotal, between 1 GiB and the old 48 GiB default."""
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(ln.split()[1]) for ln in f
+                      if ln.startswith("MemTotal:"))
+    return f"{max(1024, min(48 * 1024, mem_kb // 1024 // 4))}m"
 
 
 def get_spark(app: str = "air_health_gis_tools_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = cpus or DEFAULT_CPUS
+    cpus = min(cpus or DEFAULT_CPUS, HOST_CPUS)
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
         SparkSession.builder
@@ -32,8 +48,14 @@ def get_spark(app: str = "air_health_gis_tools_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
+        # pyspark.daemon minus the per-task zipimport directory re-read;
+        # the workers find it (and the package) whatever their cwd
+        .config("spark.python.daemon.module",
+                "air_health_gis_tools_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PKG_ROOT)
     )
     # shuffle/spill on tmpfs when available: local-mode shuffles otherwise
     # serialize on one overlay disk and flatten the core-count scaling the

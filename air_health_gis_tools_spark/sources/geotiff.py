@@ -14,6 +14,9 @@ implemented directly from the spec.
 Scale path: ``geotiff_tile_table`` hands each executor task a set of tile
 indices; tasks read ONLY their tiles' byte ranges and decode in-process
 (the COG access pattern — the whole raster never materializes anywhere).
+The scan is one ``mapInArrow``: decoded blocks go straight into Arrow tile
+batches (``raster.tile_batches``), one flat float64 buffer per batch, so no
+pixel passes through pandas or becomes a Python float.
 ``read_geotiff`` is the driver-side full decode used as the parity oracle.
 
 Transform: the sidecar ``.tfw`` world file (or the ModelPixelScale +
@@ -30,11 +33,11 @@ import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .raster import TILE_SCHEMA, tile_id_of
+from .raster import TILE_SCHEMA, tile_batches, tile_blocks, tile_id_of
 
 # TIFF tag ids (TIFF 6.0 spec §8)
 _TAGS = {
@@ -345,7 +348,7 @@ def write_geotiff(tiles: DataFrame, path: str, height: int, width: int,
                   level: int = 6) -> None:
     """Raster SINK (S9-S11): tile table → tiled float32 deflate GeoTIFF.
 
-    Tile payloads are deflate-compressed ON THE EXECUTORS (one mapInPandas
+    Tile payloads are deflate-compressed ON THE EXECUTORS (one mapInArrow
     pass — the expensive part scales out); the driver only assembles the
     IFD and streams the pre-compressed blobs. NaN is stored as ``nodata``
     and the GDAL_NODATA ascii tag is written so any downstream reader
@@ -355,22 +358,20 @@ def write_geotiff(tiles: DataFrame, path: str, height: int, width: int,
     ntx = (width + tile_px - 1) // tile_px
     nty = (height + tile_px - 1) // tile_px
 
-    out_schema = "idx int, blob binary"
-
     def _compress(batches):
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                tr, tc = int(t.row0) // tile_px, int(t.col0) // tile_px
+        for b in batches:
+            idx, blobs = [], []
+            for _, r0, c0, arr in tile_blocks(b):
                 full = np.full((tile_px, tile_px), np.float32(nodata),
                                dtype=np.float32)
-                arr = np.asarray(t.data, dtype=np.float64).reshape(t.h, t.w)
                 blk = arr.astype(np.float32)
                 blk[np.isnan(arr)] = np.float32(nodata)
-                full[:t.h, :t.w] = blk
-                rows.append((tr * ntx + tc,
-                             zlib.compress(full.tobytes(), level)))
-            yield pd.DataFrame(rows, columns=["idx", "blob"])
+                full[:arr.shape[0], :arr.shape[1]] = blk
+                idx.append((r0 // tile_px) * ntx + c0 // tile_px)
+                blobs.append(zlib.compress(full.tobytes(), level))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(idx, pa.int32()), pa.array(blobs, pa.binary())],
+                names=["idx", "blob"])
 
     # toLocalIterator: the driver streams compressed blobs partition by
     # partition instead of materializing the whole raster in driver memory
@@ -378,7 +379,7 @@ def write_geotiff(tiles: DataFrame, path: str, height: int, width: int,
     # output the engine's native sink is the partitioned tile table —
     # this writer exists for interop/export parity)
     blobs = {int(r["idx"]): bytes(r["blob"])
-             for r in tiles.mapInPandas(_compress, out_schema)
+             for r in tiles.mapInArrow(_compress, "idx int, blob binary")
              .toLocalIterator()}
     n = ntx * nty
     empty = zlib.compress(
@@ -479,24 +480,18 @@ def geotiff_tile_table(spark: SparkSession, path: str,
     idx_df = spark.range(n_blocks).repartition(
         min(n_partitions, n_blocks)).select(F.col("id").cast("int"))
 
-    def _decode(batches):
-        fh = open(info.path, "rb")
-        for pdf in batches:
-            rows = []
-            for idx in pdf["id"]:
-                idx = int(idx)
-                if info.tiled:
-                    ty, tx = divmod(idx, ntx)
-                else:
-                    ty, tx = idx, 0
-                r0, c0 = ty * info.tile_h, tx * info.tile_w
-                h = min(info.tile_h, info.height - r0)
-                w = min(info.tile_w, info.width - c0)
-                blk = decode_block(info, idx, fh)[:h, :w]
-                rows.append((tile_id_of(ty, tx), r0, c0, h, w,
-                             blk.ravel()))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in TILE_SCHEMA])
-        fh.close()
+    def _block(fh, idx: int):
+        ty, tx = divmod(idx, ntx) if info.tiled else (idx, 0)
+        r0, c0 = ty * info.tile_h, tx * info.tile_w
+        blk = decode_block(info, idx, fh)
+        return (tile_id_of(ty, tx), r0, c0,
+                blk[:min(info.tile_h, info.height - r0),
+                    :min(info.tile_w, info.width - c0)])
 
-    return idx_df.mapInPandas(_decode, TILE_SCHEMA)
+    def _decode(batches):
+        with open(info.path, "rb") as fh:
+            for b in batches:
+                yield from tile_batches(
+                    _block(fh, int(idx)) for idx in b.column("id").to_numpy())
+
+    return idx_df.mapInArrow(_decode, TILE_SCHEMA)

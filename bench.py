@@ -34,10 +34,10 @@ from air_health_gis_tools_spark.operators.pip import (pip_circle_counts,
 from air_health_gis_tools_spark.operators.zonal import buffered_stats
 from air_health_gis_tools_spark.functions.cells import hex_cell_expr
 from air_health_gis_tools_spark.plans import queries as Q
-from air_health_gis_tools_spark.session import get_spark
+from air_health_gis_tools_spark.session import DEFAULT_CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = DEFAULT_CPUS   # SPARK_GRAFT_CPUS, capped at the host's cores
 # scaling-evidence runs multiply the point set so per-core compute dominates
 # scheduler overhead (same inputs, deterministic ids)
 POINT_MULT = int(os.environ.get("SPARK_GRAFT_POINT_MULT", "1"))

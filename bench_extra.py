@@ -34,11 +34,11 @@ from air_health_gis_tools_spark.operators.pip import (pip_circle_counts,
 from air_health_gis_tools_spark.operators.zonal import (buffered_stats,
                                                         buffered_stats_tiled)
 from air_health_gis_tools_spark.plans import queries as Q
-from air_health_gis_tools_spark.session import get_spark
+from air_health_gis_tools_spark.session import DEFAULT_CPUS, get_spark
 from air_health_gis_tools_spark.sources.raster import synthetic_tile_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = DEFAULT_CPUS   # SPARK_GRAFT_CPUS, capped at the host's cores
 
 
 def bench_points(spark):

@@ -34,13 +34,7 @@ def _sorted_pdf(df):
     return pdf.sort_values("doc_id").reset_index(drop=True)
 
 
-def test_tiled_zonal_equals_formula_kernel(spark, pts):
-    """Scale path (tile table + cogroup partial/final agg) == broadcast/
-    formula kernel, bit for bit."""
-    tiles = synthetic_tile_table(spark, tile_px=256)
-    a = _sorted_pdf(buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M), 256))
-    b = _sorted_pdf(buffered_stats(pts, list(G.BUFFERS_M))
-                    .select(a.columns.tolist()))
+def _assert_frames_equal(a, b):
     for c in a.columns:
         av, bv = a[c].to_numpy(), b[c].to_numpy()
         if av.dtype.kind == "f":
@@ -48,6 +42,16 @@ def test_tiled_zonal_equals_formula_kernel(spark, pts):
                                   np.nan_to_num(bv, nan=-1.0)), c
         else:
             assert np.array_equal(av, bv), c
+
+
+def test_tiled_zonal_equals_formula_kernel(spark, pts):
+    """Scale path (tile table + cogroup partial/final agg) == broadcast/
+    formula kernel, bit for bit."""
+    tiles = synthetic_tile_table(spark, tile_px=256)
+    a = _sorted_pdf(buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M), 256))
+    b = _sorted_pdf(buffered_stats(pts, list(G.BUFFERS_M))
+                    .select(a.columns.tolist()))
+    _assert_frames_equal(a, b)
 
 
 def test_tiled_zonal_salting_is_transparent(spark, pts):
@@ -58,13 +62,7 @@ def test_tiled_zonal_salting_is_transparent(spark, pts):
     a = _sorted_pdf(buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M), 256,
                                          hot_group_rows=8, max_salt=4))
     b = _sorted_pdf(buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M), 256))
-    for c in a.columns:
-        av, bv = a[c].to_numpy(), b[c].to_numpy()
-        if av.dtype.kind == "f":
-            assert np.array_equal(np.nan_to_num(av, nan=-1.0),
-                                  np.nan_to_num(bv, nan=-1.0)), c
-        else:
-            assert np.array_equal(av, bv), c
+    _assert_frames_equal(a, b)
 
 
 def test_tiled_zonal_keeps_points_outside_coverage(spark, pts):
@@ -84,6 +82,46 @@ def test_tiled_zonal_keeps_points_outside_coverage(spark, pts):
     assert len(out) == pts.count(), "every point keeps a row"
     row = out[out["doc_id"] == one["doc_id"]].iloc[0]
     assert row["n_valid_10000"] == 0 or np.isfinite(row["mean_10000"])
+
+
+def test_tiled_zonal_accepts_double_coordinates(spark, pts):
+    """Double-typed x/y truncate to BIGINT before the tile-id DIV (the
+    kernel's ``astype(np.int64)``): same output as the long coordinates."""
+    tiles = synthetic_tile_table(spark, tile_px=256)
+    dbl = pts.select("doc_id",
+                     (F.col("x").cast("double") + 0.25).alias("x"),
+                     (F.col("y").cast("double") + 0.75).alias("y"))
+    assert dict(dbl.dtypes)["x"] == "double"
+    a = _sorted_pdf(buffered_stats_tiled(dbl, tiles, list(G.BUFFERS_M), 256))
+    b = _sorted_pdf(buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M), 256))
+    assert len(a) == pts.count()
+    _assert_frames_equal(a, b)
+
+
+def test_tiled_zonal_reads_null_pixels_as_nodata(spark, pts):
+    """Tile tables built through pandas carry NaN as Arrow NULL inside
+    ``data``: the Arrow kernel must treat those NULLs as nodata, exactly
+    like NaN in the broadcast kernel over the same raster."""
+    from air_health_gis_tools_spark.sources.raster import (
+        materialize_raster, tile_table_from_array)
+    arr = materialize_raster(G.RASTER_H, G.RASTER_W)
+    sample = pts.orderBy("doc_id").limit(40).toPandas()
+    for x, y in zip(sample["x"], sample["y"]):
+        r, c = int(y) // G.XRES, int(x) // G.XRES
+        arr[max(r - 4, 0):r + 3, max(c - 5, 0):c + 2] = np.nan
+    tiles = tile_table_from_array(spark, arr, tile_px=256).withColumn(
+        "data", F.transform("data", lambda v: F.when(~F.isnan(v), v)))
+    assert tiles.filter(F.exists("data", lambda v: v.isNull())).count() > 0
+    got = _sorted_pdf(buffered_stats_tiled(pts, tiles, list(G.BUFFERS_M),
+                                           256))
+    want = _sorted_pdf(buffered_stats(pts, list(G.BUFFERS_M), raster=arr,
+                                      spark=spark)
+                       .select(got.columns.tolist()))
+    _assert_frames_equal(got, want)
+    # every sampled point's smallest buffer lies inside its NULL hole
+    holed = got[got["doc_id"].isin(set(sample["doc_id"]))]
+    assert len(holed) == len(sample)
+    assert (holed[f"n_valid_{min(G.BUFFERS_M)}"] == 0).all()
 
 
 def test_knn_three_strategies_agree(spark, pts):

@@ -53,7 +53,7 @@ def main() -> int:
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
     from air_health_gis_tools_spark.session import get_spark
-    spark = get_spark("verify", cpus=8, shuffle_partitions=8)
+    spark = get_spark("verify", shuffle_partitions=8)
     df = m.entry(spark)
     rows = df.count()
     print("entry rows:", rows, "schema:",
