@@ -1,7 +1,8 @@
 """Cell tiling kernels: hex (H3-style, res 7-9) and square/quadkey cells.
 
-All kernels are batched NumPy inside Arrow ``pandas_udf``s — no per-row
-Python (BASELINE.json input_hint). The hex assignment is the engine's
+The NumPy kernels are batched inside Arrow ``pandas_udf``s — no per-row
+Python (BASELINE.json input_hint); the pipeline's hex cells come from
+``hex_cell_expr``, a Catalyst expression. The hex assignment is the engine's
 equivalent of the reference's point→pixel equi-join key computation
 (``get_coords_at_point``, Archived_scripts/utils.py:47-67): cell id becomes
 the hash-equi-join key for every downstream spatial join.
@@ -21,7 +22,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..geo_synth import HEX_I_SHIFT, HEX_PITCH, HEX_RES_SHIFT, XRES
+from ..geo_synth import (HEX_I_SHIFT, HEX_PITCH, HEX_RES_SHIFT, XRES,
+                         hex_cell_id_sql_encode)
 
 _OFFSETS = np.array([(di, dj) for di in (-1, 0, 1, 2) for dj in (-1, 0, 1, 2)],
                     dtype=np.int64)
@@ -80,52 +82,42 @@ def hex_cell_udf(res: int):
 
 
 def hex_cell_expr(res: int, x_col: str = "x", y_col: str = "y"):
-    """The SAME hex assignment as a pure Catalyst expression — the 100 TB
-    path: stays inside whole-stage codegen, no Arrow transfer at all
-    (measured: the Arrow round-trip, not the compute, capped the hex
-    rollup's scaling at 38M rows).
+    """The SAME hex assignment as a pure Catalyst expression: it stays
+    inside whole-stage codegen with no Arrow transfer (measured: the Arrow
+    round-trip, not the compute, capped the hex rollup's scaling at 38M
+    rows), and it is small, so analysis and every AQE re-plan stay cheap.
 
-    Two tricks keep it allocation-free integer arithmetic (plain
-    ``least()``, no struct/array objects — struct-array argmin forms GC-
-    thrash at 10⁸ rows):
-    - the even-parity constraint splits STATICALLY: candidate
-      (i0+di, j0+dj) is even iff (di+dj) parity matches (i0+j0) parity, so
-      the valid 8-candidate set is one of two static expression lists
-      picked by one CASE on pmod(i0+j0, 2);
-    - each candidate packs to one BIGINT ``d2·2³² + (di+1)·2¹⁶ + (dj+1)``
-      whose ordering IS the (d2, i, j) lexicographic tie-break the kernel
-      and the DuckDB oracle use (d2 < 2²⁵ for every supported pitch, and
-      i = i0+di is monotone in di).
+    The centres ``{(i*w, j*h) : i+j even}`` are the union of two
+    rectangular sub-lattices, A = (even i, even j) and B = (odd i, odd j).
+    In a rectangular lattice the squared distance splits into an x term
+    and a y term, so the nearest point is the nearest index per axis, ties
+    to the lower index: ``i = 2*floor((x + w - 1) / 2w)`` in A and
+    ``i = 2*floor((x - 1) / 2w) + 1`` in B (the same for ``j`` with
+    ``h``). Its offset ``x - i*w`` is then ``pmod(x + w - 1, 2w) - (w-1)``
+    in A and ``pmod(x - 1, 2w) - (w-1)`` in B; ``pmod`` floors, so negative
+    frames match numpy ``//`` too. The nearest centre is the nearer of the
+    two winners; on equal distance the lower ``i`` (the larger offset)
+    wins, and ``i`` is even in A and odd in B, so they never tie. That is
+    the ``(d2, i, j)`` lexicographic rule of ``hex_assign_np`` and the
+    DuckDB oracle, and both winners lie in their 16-candidate window, so
+    all three agree bit for bit. Pure int64 arithmetic.
     """
     w, h = HEX_PITCH[res]
-    # FLOOR division, exact in int64: Spark's DIV truncates toward zero,
-    # but the Arrow kernel (numpy //) floors — subtracting pmod first makes
-    # the dividend an exact multiple of the pitch, where truncation == floor,
-    # so the expression matches hex_assign_np for negative coords too
-    i0 = f"((({x_col}) - pmod({x_col}, {w})) DIV {w})"
-    j0 = f"((({y_col}) - pmod({y_col}, {h})) DIV {h})"
 
-    def key(di: int, dj: int) -> str:
-        i = f"({i0} + {di})"
-        j = f"({j0} + {dj})"
-        dx = f"(({x_col}) - {i} * {w}L)"
-        dy = f"(({y_col}) - {j} * {h}L)"
-        packed = (f"(({dx} * {dx} + {dy} * {dy}) * {1 << 32}L "
-                  f"+ {(di + 1) << 16}L + {dj + 1}L)")
-        return packed
+    def offsets(c: str, p: int) -> tuple[str, str]:
+        return (f"(pmod(({c}) + {p - 1}L, {2 * p}L) - {p - 1}L)",
+                f"(pmod(({c}) - 1L, {2 * p}L) - {p - 1}L)")
 
-    evens = [key(di, dj) for di in (-1, 0, 1, 2) for dj in (-1, 0, 1, 2)
-             if (di + dj) % 2 == 0]
-    odds = [key(di, dj) for di in (-1, 0, 1, 2) for dj in (-1, 0, 1, 2)
-            if (di + dj) % 2 == 1]
-    best = (f"(CASE WHEN pmod({i0} + {j0}, 2) = 0 "
-            f"THEN least({', '.join(evens)}) "
-            f"ELSE least({', '.join(odds)}) END)")
-    bi = f"({i0} + (({best} DIV {1 << 16}L) % 65536) - 1)"
-    bj = f"({j0} + ({best} % 65536) - 1)"
-    enc = (f"(CAST({res} AS BIGINT) * {1 << HEX_RES_SHIFT} "
-           f"+ {bi} * {1 << HEX_I_SHIFT} + {bj})")
-    return F.expr(enc)
+    (dxa, dxb), (dya, dyb) = offsets(x_col, w), offsets(y_col, h)
+    da = f"({dxa} * {dxa} + {dya} * {dya})"
+    db = f"({dxb} * {dxb} + {dyb} * {dyb})"
+
+    def enc(dx: str, dy: str) -> str:   # exact divisions: x - dx = i*w
+        return hex_cell_id_sql_encode(res, f"(({x_col}) - {dx}) DIV {w}L",
+                                      f"(({y_col}) - {dy}) DIV {h}L")
+
+    return F.expr(f"CASE WHEN {da} < {db} OR ({da} = {db} AND {dxa} > {dxb})"
+                  f" THEN {enc(dxa, dya)} ELSE {enc(dxb, dyb)} END")
 
 
 # --------------------------------------------------------------------------

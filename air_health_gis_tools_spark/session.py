@@ -31,6 +31,23 @@ def default_driver_mem() -> str:
     return f"{max(1024, min(48 * 1024, mem_kb // 1024 // 4))}m"
 
 
+def tmpfs_local_dir(path: str = "/dev/shm/spark-local") -> str | None:
+    """Shuffle/spill dir on tmpfs when available, else None.
+
+    Local-mode shuffles otherwise serialize on one overlay disk and flatten
+    the core-count scaling a cluster's distributed shuffle fabric would
+    provide. ``SPARK_LOCAL_DIRS`` overrides ``spark.local.dir``, so when it
+    is set the dir is not made at all.
+    """
+    if os.environ.get("SPARK_LOCAL_DIRS"):
+        return None
+    try:
+        os.makedirs(path, exist_ok=True)
+    except OSError:
+        return None
+    return path
+
+
 def get_spark(app: str = "air_health_gis_tools_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None,
@@ -57,15 +74,9 @@ def get_spark(app: str = "air_health_gis_tools_spark",
                 "air_health_gis_tools_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PKG_ROOT)
     )
-    # shuffle/spill on tmpfs when available: local-mode shuffles otherwise
-    # serialize on one overlay disk and flatten the core-count scaling the
-    # cluster's distributed shuffle fabric would provide
-    shm = "/dev/shm/spark-local"
-    try:
-        os.makedirs(shm, exist_ok=True)
-        b = b.config("spark.local.dir", shm)
-    except OSError:
-        pass
+    local_dir = tmpfs_local_dir()
+    if local_dir:
+        b = b.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -14,6 +14,9 @@ Usage (sandbox smoke):
 
 The job writes three result tables (zonal, knn, pip) plus a lineage/metrics
 manifest; re-running with the same --checkpoint resumes unfinished buckets.
+The three sinks run concurrently, from one thread each that carries the
+caller's job group; resume is unchanged, since the zonal stage still commits
+its buckets one by one.
 """
 
 from __future__ import annotations
@@ -23,9 +26,11 @@ import json
 import os
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession, functions as F
 
 
@@ -69,11 +74,22 @@ def main(argv=None):
     store = CheckpointStore(args.checkpoint)
     zonal = out["zonal"].withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(args.resume_buckets)))
-    run_stage(zonal, "bucket", store,
-              buckets=list(range(args.resume_buckets)))
-
-    out["knn"].write.mode("overwrite").parquet(f"{args.output}/knn")
-    out["pip"].write.mode("overwrite").parquet(f"{args.output}/pip")
+    sinks = [
+        lambda: run_stage(zonal, "bucket", store,
+                          buckets=list(range(args.resume_buckets))),
+        lambda: out["knn"].write.mode("overwrite").parquet(
+            f"{args.output}/knn"),
+        lambda: out["pip"].write.mode("overwrite").parquet(
+            f"{args.output}/pip"),
+    ]
+    # the three sinks are independent chains of small jobs: run them side
+    # by side so their tasks share the cores. inheritable_thread_target
+    # carries the caller's job group, description and tags into each thread
+    with ThreadPoolExecutor(len(sinks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn))
+                   for fn in sinks]
+    for f in futures:
+        f.result()
 
     n = spark.read.parquet(*[store.bucket_path(str(b))
                              for b in range(args.resume_buckets)]).count()

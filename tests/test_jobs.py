@@ -77,3 +77,32 @@ def test_warc_curation_job(spark, tmp_path):
     got = (spark.read.parquet(os.path.join(out, "curated"))
            .select("url_norm").toPandas())
     assert set(got["url_norm"]) == keep_urls
+
+
+def test_extract_job_sinks_keep_the_callers_job_group(spark, tmp_path):
+    """The three sinks run on worker threads, and every job they start
+    still carries the caller's job group: plain threads would drop it and
+    leave those jobs ungrouped."""
+    from jobs.extract_job import main
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    group = "extract-job-group-test"
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        main(["--synthetic-pages", "300", "--output", out,
+              "--checkpoint", ckpt, "--resume-buckets", "4"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    # no new ungrouped job (old ones may age out of the tracker)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert tracker.getJobIdsForGroup(group)
+    zonal = spark.read.parquet(*[os.path.join(ckpt, f"bucket={b}")
+                                 for b in range(4)]).count()
+    knn = spark.read.parquet(os.path.join(out, "knn")).count()
+    assert zonal == knn == 300

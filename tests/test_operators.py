@@ -241,16 +241,26 @@ def test_hex_expr_equals_kernel(spark, pts):
 def test_hex_expr_equals_kernel_negative_coords(spark):
     """ADVICE r2: Spark DIV truncates toward zero while the Arrow kernel
     floors — the expression must floor too, so negative-quadrant frames
-    (a reprojected CRS can go negative) agree bit-for-bit."""
+    (a reprojected CRS can go negative) agree bit-for-bit.
+
+    Random points almost never tie, so each resolution also gets lattice
+    points, half-pitch points and a dense grid around the origin: they
+    reach the equal-distance branches of the (d2, i, j) tie-break."""
     from pyspark.sql import functions as F2
     from air_health_gis_tools_spark.functions.cells import (hex_cell_expr,
                                                             hex_cell_udf)
     rng = np.random.default_rng(11)
-    rows = [(int(a), int(b)) for a, b in zip(
-        rng.integers(-500_000, 500_000, 2000),
-        rng.integers(-500_000, 500_000, 2000))]
-    df = spark.createDataFrame(rows, "x long, y long")
-    for res in (7, 8, 9):
+    rand = pd.DataFrame({"x": rng.integers(-500_000, 500_000, 2000),
+                         "y": rng.integers(-500_000, 500_000, 2000)})
+    for res, (w, h) in G.HEX_PITCH.items():
+        k = np.arange(-8, 9, dtype=np.int64)
+        lattice = [np.concatenate([k * p, k * p + p // 2,
+                                   k * p + (p + 1) // 2]) for p in (w, h)]
+        dense = np.arange(-128, 129, dtype=np.int64)
+        ties = pd.DataFrame(np.concatenate(
+            [np.stack(np.meshgrid(*axes), -1).reshape(-1, 2)
+             for axes in (lattice, (dense, dense))]), columns=["x", "y"])
+        df = spark.createDataFrame(pd.concat([rand, ties]), "x long, y long")
         bad = (df.withColumn("a", hex_cell_udf(res)(F2.col("x"),
                                                     F2.col("y")))
                .withColumn("b", hex_cell_expr(res))

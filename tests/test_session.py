@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import os
 
-from air_health_gis_tools_spark.session import default_driver_mem
+from air_health_gis_tools_spark.session import (default_driver_mem,
+                                                tmpfs_local_dir)
 
 
 def test_session_is_sized_from_the_host(spark):
@@ -16,6 +17,18 @@ def test_session_is_sized_from_the_host(spark):
                       if ln.startswith("MemTotal:")) // 1024
     heap_mb = int(default_driver_mem().rstrip("m"))
     assert 1024 <= heap_mb <= max(1024, mem_mb // 4)
+
+
+def test_tmpfs_local_dir_yields_to_spark_local_dirs(tmp_path, monkeypatch):
+    """SPARK_LOCAL_DIRS overrides spark.local.dir, so the tmpfs dir is
+    neither set nor created then; without it the dir is made and used."""
+    shm = tmp_path / "spark-local"
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path / "local"))
+    assert tmpfs_local_dir(str(shm)) is None
+    assert not shm.exists()
+    monkeypatch.delenv("SPARK_LOCAL_DIRS")
+    assert tmpfs_local_dir(str(shm)) == str(shm)
+    assert shm.is_dir()
 
 
 def test_python_workers_come_from_worker_daemon(spark):
